@@ -28,25 +28,19 @@ duplicates:
 import argparse
 import hashlib
 import os
+import sys
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-BASE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "base")
-OFF = 100_000_000
-KEY_COLS = {
-    "customer": ["c_custkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
-    "part": ["p_partkey"],
-    "supplier": ["s_suppkey"],
-    "events": ["event_id", "user_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-}
-SINGLE_COPY = ["nation", "region"]
+HERE = os.path.dirname(os.path.abspath(__file__))
+BASE = os.path.join(HERE, "base")
+sys.path.insert(0, os.path.join(os.path.dirname(HERE), "dev"))
+# key offsets and single-copy tables as in the repository's scale corpus
+from make_scale_corpus import KEY_COLS, OFF, SINGLE_COPY  # noqa: E402
+
 TABLES = SINGLE_COPY + list(KEY_COLS)
 
 

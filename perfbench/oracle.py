@@ -1,40 +1,17 @@
 """DuckDB oracle comparison for the benchmark's untimed correctness pass.
 
-Same comparison rules as the repository's correctness gate: both sides
-as pandas DataFrames, columns sorted by name, rows sorted over all
-columns, then an exact, dtype-strict frame comparison.
+The comparison is dev/selfcheck.py's own `compare`: both sides as pandas
+DataFrames, columns sorted by name, rows sorted over all columns, then an
+exact, dtype-strict frame comparison.
 """
 import os
+import sys
 
 import duckdb
-import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
-
-def canon_df(df):
-    df = df[sorted(df.columns)]
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
-def compare(got, want):
-    """None if equal under the dtype-strict rules, else a diagnostic."""
-    if sorted(got.columns) != sorted(want.columns):
-        return (f"SCHEMA-MISMATCH spark={sorted(got.columns)} "
-                f"oracle={sorted(want.columns)}")
-    if len(got) != len(want):
-        return f"ROWCOUNT-MISMATCH spark={len(got)} oracle={len(want)}"
-    g, w = canon_df(got), canon_df(want)
-    dt = [(c, str(g[c].dtype), str(w[c].dtype))
-          for c in g.columns if g[c].dtype != w[c].dtype]
-    if dt:
-        return f"DTYPE-MISMATCH (col, spark, oracle)={dt}"
-    try:
-        pd.testing.assert_frame_equal(g, w, check_dtype=True, check_exact=True)
-    except AssertionError as e:
-        return "VALUE-MISMATCH " + str(e).replace("\n", " ")[:300]
-    return None
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "dev"))
+from selfcheck import TABLES, compare  # noqa: E402
 
 
 def check(input_dir: str, results_dir: str, sqls: dict) -> dict:

@@ -36,9 +36,6 @@ WORKLOADS = ["fleet", "dedup_search"]
 HEAP = "3g"
 RUN_LIMIT_S = 175
 
-sys.path.insert(0, HERE)
-import oracle  # noqa: E402
-
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
@@ -79,8 +76,6 @@ def build_inputs() -> list:
 
 def build(env: dict) -> None:
     """Compiles engine + harness unless the sources match the last build."""
-    if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala")):
-        die("engine sources (src/main/scala) not found next to perfbench/")
     h = hashlib.sha256()
     for f in build_inputs():
         h.update(os.path.relpath(f, ROOT).encode())
@@ -169,6 +164,15 @@ def main() -> int:
     ap.add_argument("--min-reps", type=int)
     ap.add_argument("--inject-failure", action="store_true")
     args = ap.parse_args()
+    # the engine's sources and its dev tools (the oracle's comparison rules,
+    # the replication constants) sit next to perfbench/
+    for need in (os.path.join("src", "main", "scala"),
+                 os.path.join("dev", "selfcheck.py"),
+                 os.path.join("dev", "make_scale_corpus.py")):
+        if not os.path.exists(os.path.join(ROOT, need)):
+            die(f"{need} not found next to perfbench/")
+    sys.path.insert(0, HERE)
+    import oracle
     extra = []
     for opt in ("copies", "setup_rounds", "min_reps"):
         if getattr(args, opt) is not None:
@@ -224,7 +228,9 @@ def main() -> int:
     with open(os.path.join(STATE, f"{tag}.record.json"), "w") as fh:
         json.dump(rec, fh, indent=1)
     print(json.dumps({k: rec[k] for k in ("workload", "seed", "provenance",
-                                          "setup", "reps", "tail_pct", "tail_n",
+                                          "setup", "reps", "rep_wall_s",
+                                          "rep_cal_s", "queries",
+                                          "tail_pct", "tail_n",
                                           "end_to_end", "failed_frac",
                                           "failures")}))
     print(json.dumps({"correct": failed == 0, "attempted": attempted,

@@ -87,6 +87,10 @@ def check_run(spec: dict, workload: str, trace: int) -> None:
            f"{tag}: failing query recorded with exception, message and phase")
     expect(result["failed"] >= 1 and not result["correct"],
            f"{tag}: failing query counted in failed")
+    expect(any(f["phase"].startswith("reference:") for f in injected),
+           f"{tag}: failure in the reference round recorded")
+    expect(result["failed"] == len(record["failures"]),
+           f"{tag}: every recorded failure, set-up rounds included, counted")
     if not trace:
         ok = result["metrics"]["ok_frac"]["value"]
         expect(abs(ok - (1 - result["failed"] / result["attempted"])) < 1e-9,

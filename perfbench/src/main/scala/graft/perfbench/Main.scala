@@ -2,7 +2,7 @@ package graft.perfbench
 
 import graft.{Engine, SparkEntry}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -11,10 +11,14 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.json4s.{JArray, JBool, JDouble, JLong, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
 import scala.jdk.CollectionConverters._
 
 /** One benchmark invocation: set-up rounds (the last one also writes the
@@ -56,11 +60,18 @@ object Main {
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
   private[perfbench] def secs(ns: Long): Double = ns / 1e9
 
+  private[perfbench] def obj(kv: (String, JValue)*): JValue = JObject(kv.toList)
+  private[perfbench] def dbl(v: Double): JValue =
+    if (v.isNaN || v.isInfinite) JNull else JDouble(v)
+  private[perfbench] def num(v: Double, unit: String): JValue =
+    obj("value" -> dbl(v), "unit" -> JString(unit))
+  private[perfbench] def str(v: Option[String]): JValue = v.map(JString(_)).getOrElse(JNull)
+
   def parse(args: Array[String]): Opts = {
     val m = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     Opts(m("workload"), m("seed").toLong, m("seconds").toDouble, m("trace") == "1",
       Paths.get(m("work")).toAbsolutePath, m("gen"), Paths.get(m("record")).toAbsolutePath,
-      m.get("copies").map(_.toInt), m.getOrElse("setup-rounds", "2").toInt,
+      m.get("copies").map(_.toInt), m.getOrElse("setup-rounds", "3").toInt,
       m.get("min-reps").map(_.toInt), m.get("inject-failure").contains("1"))
   }
 
@@ -160,7 +171,6 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
   private val engineN = 50000
   private lazy val engineExpected = primeSumSieve(engineStart, engineN)
 
-  private val failures = mutable.ArrayBuffer.empty[Failure]
   private val reference = mutable.Map.empty[String, Digest]
   private val trace = new Trace
   private val collector = new Collector
@@ -196,11 +206,13 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
 
   // -- output checks ---------------------------------------------------------
 
-  /** Row count, an order-insensitive content hash and the contract
-    * booleans, in one untimed aggregation. Floating-point values are
-    * hashed at nine significant digits so a last-ulp difference from
-    * summation order does not read as a content change. */
-  private def digest(df: DataFrame): Digest = {
+  /** The query with its digest attached as observed metrics: row count,
+    * an order-insensitive content hash and the contract booleans, computed
+    * by the query's own execution (no second run) and read when it ends.
+    * Floating-point values are hashed at nine significant digits so a
+    * last-ulp difference from summation order does not read as a content
+    * change. */
+  private def observed(df: DataFrame): (DataFrame, Observation, Seq[String]) = {
     val fields = df.schema.fields
     val renamed = df.toDF(fields.indices.map(i => s"c$i"): _*)
     def norm(c: Column, t: DataType): Column = t match {
@@ -215,10 +227,14 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
       .filter(i => fields(i).dataType == BooleanType && contractCols(fields(i).name))
     val aggs = Seq(sum(h.cast(DecimalType(38, 0))).as("h")) ++
       contracts.map(i => min(col(s"c$i")).as(s"k$i"))
-    val row = renamed.agg(count(lit(1)).as("n"), aggs: _*).head()
+    val ob = Observation()
+    (renamed.observe(ob, count(lit(1)).as("n"), aggs: _*), ob, contracts.map(fields(_).name))
+  }
+
+  private def digest(ob: Observation, contracts: Seq[String]): Digest = {
+    val row = Await.result(ob.future, 60.seconds)
     val bad = contracts.zipWithIndex.collectFirst {
-      case (i, j) if row.isNullAt(j + 2) && row.getLong(0) > 0 || !row.isNullAt(j + 2) && !row.getBoolean(j + 2) =>
-        fields(i).name
+      case (c, j) if row.isNullAt(j + 2) && row.getLong(0) > 0 || !row.isNullAt(j + 2) && !row.getBoolean(j + 2) => c
     }
     Digest(row.getLong(0), String.valueOf(row.get(1)), bad)
   }
@@ -230,16 +246,22 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
       (if (root ne e) s" (cause ${root.getClass.getName})" else ""), msg.take(400))
   }
 
-  private def checkFailure(q: String, rep: Int, d: Digest): Option[Failure] =
-    d.badContract.map(c => Failure(q, rep, "check", "ContractViolation",
+  /** Contract booleans on every execution; in a timed repetition also
+    * row count and content hash against the reference round's. */
+  private def checkFailure(q: String, rep: Int, mode: String, d: Digest): Option[Failure] = {
+    val phase = s"$mode:check"
+    d.badContract.map(c => Failure(q, rep, phase, "ContractViolation",
       s"contract column $c is not true on every row"))
-      .orElse(reference.get(q).flatMap { r =>
-        if (r.rows != d.rows) Some(Failure(q, rep, "check", "RowCountMismatch",
-          s"${d.rows} rows, reference pass had ${r.rows}"))
-        else if (r.hash != d.hash) Some(Failure(q, rep, "check", "ContentMismatch",
-          "order-insensitive content hash differs from the reference pass"))
-        else None
+      .orElse(if (mode != "timed") None else reference.get(q) match {
+        case None => Some(Failure(q, rep, phase, "MissingReference",
+          "the reference round gave no digest to check against"))
+        case Some(r) if r.rows != d.rows => Some(Failure(q, rep, phase, "RowCountMismatch",
+          s"${d.rows} rows, reference round had ${r.rows}"))
+        case Some(r) if r.hash != d.hash => Some(Failure(q, rep, phase, "ContentMismatch",
+          "order-insensitive content hash differs from the reference round"))
+        case _ => None
       })
+  }
 
   // -- plan inspection (traced repetitions) ----------------------------------
 
@@ -269,8 +291,11 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
   // -- one execution -----------------------------------------------------------
 
   /** Runs one item: build, plan, exec, timed; then (untimed) the output
-    * check. `mode` is "setup", "reference" or "timed"; the first timed
-    * repetition checks every output against the reference. */
+    * check. `mode` is "setup", "reference" or "timed". Every execution's
+    * contract booleans are checked. The reference round is timed like any
+    * set-up round; its digest becomes the reference, and afterwards,
+    * untimed, it writes each result for the DuckDB oracle. Every timed
+    * repetition checks every output against the reference digest. */
   private def runItem(q: String, dir: String, rep: Int, mode: String,
       repSpan: Int): Sample = {
     spark.catalog.clearCache()
@@ -291,7 +316,7 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
     val cpu0 = os.getProcessCpuTime
     var tb, tp, te = 0.0
     var gcExec = 0L
-    val result: Either[Failure, Option[DataFrame]] = try {
+    val result: Either[Failure, Option[(DataFrame, Observation, Seq[String])]] = try {
       if (q == Workloads.EngineItem) {
         val t0 = enter("build")
         import spark.implicits._
@@ -307,22 +332,21 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
         tb = secs(t1 - t0); te = secs(t2 - t1)
         if (mode == "timed") engineTimes += ((rep, tb, te, secs(reduceNs)))
         if (got != engineExpected)
-          Left(Failure(q, rep, "check", "WrongResult", s"prime sum $got, expected $engineExpected"))
+          Left(Failure(q, rep, s"$mode:check", "WrongResult", s"prime sum $got, expected $engineExpected"))
         else Right(None)
       } else {
         val t0 = enter("build")
-        val df = if (q == failQuery) failingQuery(dir) else registry(q)(spark, dir)
-        val t1 = enter("plan")
+        val raw = if (q == failQuery) failingQuery(dir) else registry(q)(spark, dir)
+        val t1 = System.nanoTime()
+        val (df, ob, contracts) = observed(raw)
+        val t1p = enter("plan")
         val plan = df.queryExecution.executedPlan
         val t2 = enter("exec")
         val g0 = gcMs
-        // the reference pass writes the result (read by the DuckDB oracle
-        // and digested below) instead of discarding it
-        if (mode == "reference") df.coalesce(1).write.mode("overwrite").parquet(resultPath(q))
-        else df.write.format("noop").mode("overwrite").save()
+        df.write.format("noop").mode("overwrite").save()
         val t3 = System.nanoTime()
         gcExec = gcMs - g0
-        tb = secs(t1 - t0); tp = secs(t2 - t1); te = secs(t3 - t2)
+        tb = secs(t1 - t0); tp = secs(t2 - t1p); te = secs(t3 - t2)
         if (traced) {
           val ph = df.queryExecution.tracker.phases
           def ps(k: String) = ph.get(k).map(_.durationMs / 1e3).getOrElse(0.0)
@@ -332,7 +356,7 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
             CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, gcExec,
             sc.getPersistentRDDs.keys.count(!persisted0(_)))))
         }
-        Right(Some(df))
+        Right(Some((raw, ob, contracts)))
       }
     } catch { case e: Throwable => Left(fail(q, rep, s"$mode:$phase", e)) }
     val cpu = os.getProcessCpuTime - cpu0
@@ -344,18 +368,16 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
     val failure = result match {
       case Left(f) => Some(f)
       case Right(None) => None
-      case Right(Some(df)) if mode == "timed" && rep == 1 =>
-        try { setPhase("check", q, rep, 0); checkFailure(q, rep, digest(df)) }
-        catch { case e: Throwable => Some(fail(q, rep, s"$mode:check", e)) }
-      case Right(Some(_)) if mode == "reference" =>
+      case Right(Some((raw, ob, contracts))) =>
         try {
-          setPhase("check", q, rep, 0)
-          val d = digest(spark.read.parquet(resultPath(q)))
-          reference(q) = d
-          d.badContract.map(c => Failure(q, rep, "check", "ContractViolation",
-            s"contract column $c is not true on every row"))
+          val d = digest(ob, contracts)
+          if (mode == "reference") {
+            reference(q) = d
+            setPhase("check", q, rep, 0)
+            raw.write.mode("overwrite").parquet(resultPath(q))
+          }
+          checkFailure(q, rep, mode, d)
         } catch { case e: Throwable => Some(fail(q, rep, s"$mode:check", e)) }
-      case _ => None
     }
     sc.clearJobGroup()
     sc.setLocalProperty("perfbench.span", null)
@@ -371,10 +393,16 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
     spark.range(10).select(boom(col("id")).as("x"))
   }
 
-  private def pass(dir: String, rep: Int, mode: String): Seq[Sample] = {
+  /** Runs every item once. A timed pass runs the calibration job before
+    * each item (outside the item's timing) and adds its times to `cal`. */
+  private def pass(dir: String, rep: Int, mode: String,
+      cal: mutable.Buffer[Double] = mutable.Buffer.empty): Seq[Sample] = {
     val repSpan = if (tracing && mode == "timed") trace.open(0, s"rep$rep", "repetition") else 0
     val t0 = System.nanoTime()
-    val out = items.map(q => runItem(q, dir, rep, mode, repSpan))
+    val out = items.map { q =>
+      if (mode == "timed") cal += calibrationJob()
+      runItem(q, dir, rep, mode, repSpan)
+    }
     if (repSpan != 0) trace.close(repSpan)
     System.err.println(f"[perfbench] ${w.name} $mode pass $rep: ${secs(System.nanoTime() - t0)}%.2f s " +
       f"(queries ${out.map(_.total).sum}%.2f s, ${out.count(_.failure.nonEmpty)} failed)")
@@ -406,17 +434,14 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
       finally s.close()
     }
 
-  /** Seconds a fixed Spark job that runs no engine code takes right now
-    * (median of five): tracks how fast the host runs Spark at this moment. */
-  private def calibrate(): Double = {
+  /** Seconds a fixed Spark job that runs no engine code takes right now:
+    * tracks how fast the host runs Spark at this moment. */
+  private def calibrationJob(): Double = {
     sc.setJobGroup("calibration", "calibration", interruptOnCancel = false)
-    val ts = (1 to 5).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0, 4000000, 1, cores).selectExpr("sum(id * 7 % 13) AS s").collect()
-      secs(System.nanoTime() - t0)
-    }
+    val t0 = System.nanoTime()
+    spark.range(0, 4000000, 1, cores).selectExpr("sum(id * 7 % 13) AS s").collect()
     sc.clearJobGroup()
-    median(ts)
+    secs(System.nanoTime() - t0)
   }
 
   /** Drains the listener bus: waits until every started job has ended. */
@@ -431,25 +456,29 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
 
   def run(): Unit = {
     val storeDir = Paths.get("target")
-    // set-up rounds: fresh corpus path each time, so every round starts
-    // with no store and no in-process memo for its corpus
-    case class Round(genS: Double, coldS: Double, storeBytes: Long,
-        cold: Map[String, Double])
+    // Set-up rounds, each on a fresh corpus path, so every round starts
+    // with no store and no in-process memo for its corpus. The first round
+    // also pays the JIT and codegen warm-up; the last one afterwards, untimed,
+    // writes the reference results.
+    case class Round(mode: String, genS: Double, coldS: Double, storeBytes: Long,
+        cold: Map[String, Double]) {
+      def setupS: Double = genS + coldS
+    }
     var tables = Map.empty[String, (Long, Long)]
     var dir = ""
     Files.createDirectories(o.work.resolve("results"))
+    val roundSamples = mutable.ArrayBuffer.empty[Sample]
     val rounds = (1 to o.setupRounds).map { r =>
       val d = o.work.resolve(s"input-r$r")
       val t0 = System.nanoTime()
       tables = generate(d)
       val genS = secs(System.nanoTime() - t0)
       val s0 = dirBytes(storeDir)
-      // the last round writes each result (for the DuckDB oracle) instead
-      // of discarding it, and takes the reference digests from it
-      val cold = pass(d.toString, 0, if (r == o.setupRounds) "reference" else "setup")
-      cold.flatMap(_.failure).foreach(failures += _)
+      val mode = if (r == o.setupRounds) "reference" else "setup"
+      val cold = pass(d.toString, 0, mode)
+      roundSamples ++= cold
       dir = d.toString
-      Round(genS, cold.map(_.total).sum, dirBytes(storeDir) - s0,
+      Round(mode, genS, cold.map(_.total).sum, dirBytes(storeDir) - s0,
         cold.map(s => s.query -> s.total).toMap)
     }
 
@@ -465,16 +494,18 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
       rep += 1
       tracing = o.trace && rep % 2 == 0
       if (tracing) sc.addSparkListener(collector)
-      repCal += calibrate()
+      // calibration samples taken just before and in between the
+      // repetition's items, so they see the host as the items do
+      val cals = mutable.ArrayBuffer(calibrationJob(), calibrationJob())
       heapPeak.set(0L); heapArmed = true
-      val ss = pass(dir, rep, "timed")
+      val ss = pass(dir, rep, "timed", cals)
+      repCal += median(cals.toSeq)
       System.gc()
       heapArmed = false
       repHeap += math.max(heapPeak.get(),
         ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed)
       if (tracing) { drain(); sc.removeSparkListener(collector) }
       ss.foreach(s => samples += ((s, tracing)))
-      ss.flatMap(_.failure).foreach(failures += _)
     }
     tracing = false
     val measureS = elapsed
@@ -487,74 +518,78 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
     val timed = if (o.trace) tracedS else untraced
     val nItems = items.size
     val tailPct = math.max(0.5, 1.0 - 10.0 / (nItems * minReps))
-    // Timings are reported in units of the calibration job's time measured
-    // just before the same repetition, which cancels most of the host's
-    // speed drift (shared VMs slow down by up to 1.8x for minutes at a
-    // time); the raw seconds are kept in the record.
+    // Timings are reported in units of the calibration job's median time
+    // within the same repetition, which cancels most of the host's speed
+    // drift (shared VMs slow down by up to 1.8x for minutes at a time);
+    // the raw seconds are kept in the record.
     val cal = repCal.toSeq
     def calOf(s: Sample) = cal(s.rep - 1)
     val untracedReps = reps(untraced)
     val rel = untraced.map(s => s.total / calOf(s)).sorted
-    val e2e = Json.obj(
-      "wall_cal" -> Json.num(median(untracedReps.map(r => r.map(_.total).sum / calOf(r.head))), "cal"),
-      "query_p50_cal" -> Json.num(quantile(rel, 0.5), "cal"),
-      "query_tail_cal" -> Json.num(quantile(rel, tailPct), "cal"),
-      "cpu_cal" -> Json.num(median(untracedReps.map(r => secs(r.map(_.cpuNs).sum) / calOf(r.head))), "cal"),
-      "peak_heap_mb" -> Json.num(repHeap.max / 1048576.0, "MB"),
-      "wall_s" -> Json.num(median(untracedReps.map(_.map(_.total).sum)), "s"),
-      "query_p50_s" -> Json.num(quantile(untraced.map(_.total).sorted, 0.5), "s"),
-      "query_tail_s" -> Json.num(quantile(untraced.map(_.total).sorted, tailPct), "s"),
-      "cpu_s" -> Json.num(median(untracedReps.map(r => secs(r.map(_.cpuNs).sum))), "s"),
-      "calibration_s" -> Json.num(median(cal), "s"))
-    val attempted = samples.size
-    val failedTimed = samples.count(_._1.failure.nonEmpty)
+    val e2e = obj(
+      "wall_cal" -> num(median(untracedReps.map(r => r.map(_.total).sum / calOf(r.head))), "cal"),
+      "query_p50_cal" -> num(quantile(rel, 0.5), "cal"),
+      "query_tail_cal" -> num(quantile(rel, tailPct), "cal"),
+      "cpu_cal" -> num(median(untracedReps.map(r => secs(r.map(_.cpuNs).sum) / calOf(r.head))), "cal"),
+      "peak_heap_mb" -> num(median(untracedReps.map(r => repHeap(r.head.rep - 1) / 1048576.0)), "MB"),
+      "wall_s" -> num(median(untracedReps.map(_.map(_.total).sum)), "s"),
+      "query_p50_s" -> num(quantile(untraced.map(_.total).sorted, 0.5), "s"),
+      "query_tail_s" -> num(quantile(untraced.map(_.total).sorted, tailPct), "s"),
+      "cpu_s" -> num(median(untracedReps.map(r => secs(r.map(_.cpuNs).sum))), "s"),
+      "calibration_s" -> num(median(cal), "s"))
+    // every execution counts, set-up and reference rounds included: a query
+    // that fails cold and runs warm is still a failure
+    val executed = roundSamples.toSeq ++ samples.map(_._1)
+    val failures = executed.flatMap(_.failure)
 
     val layerJson = if (o.trace) layerMetrics(rounds.map(r => (r.storeBytes, r.cold)),
-      reps(tracedS), reps(untraced), tables) else Json.obj()
+      reps(tracedS), reps(untraced), tables) else obj()
     if (o.trace) writeTrace(o.work.resolve("trace.json"))
 
-    val record = Json.obj(
-      "workload" -> Json.str(w.name),
-      "seed" -> Json.raw(o.seed.toString),
-      "trace" -> Json.raw(o.trace.toString),
-      "input_dir" -> Json.str(dir),
-      "items" -> Json.arr(items.map(Json.str)),
-      "oracle_sql" -> Json.obj(items.filter(oracle.contains).map(q => q -> Json.str(oracle(q))): _*),
+    val record = obj(
+      "workload" -> JString(w.name),
+      "seed" -> JLong(o.seed),
+      "trace" -> JBool(o.trace),
+      "input_dir" -> JString(dir),
+      "items" -> JArray(items.map(JString(_)).toList),
+      "oracle_sql" -> obj(items.filter(oracle.contains).map(q => q -> JString(oracle(q))): _*),
       "provenance" -> provenance(tables),
-      "setup" -> Json.obj(
-        "session_s" -> Json.raw(f"$sessionS%.6f"),
-        "rounds" -> Json.arr(rounds.map(r => Json.obj(
-          "gen_s" -> Json.raw(f"${r.genS}%.6f"), "cold_pass_s" -> Json.raw(f"${r.coldS}%.6f"),
-          "store_bytes_written" -> Json.raw(r.storeBytes.toString)))),
+      "setup" -> obj(
+        "session_s" -> JDouble(sessionS),
+        "rounds" -> JArray(rounds.map(r => obj(
+          "mode" -> JString(r.mode), "gen_s" -> JDouble(r.genS),
+          "cold_pass_s" -> JDouble(r.coldS),
+          "store_bytes_written" -> JLong(r.storeBytes))).toList),
         // settled: the first two timed repetitions agree within 5%
-        "warmup_settled" -> Json.raw(settled.toString),
-        // set-up time: session start, then the median set-up round
-        // (input generation plus the cold first pass that builds stores)
-        "setup_s" -> Json.raw(f"${sessionS + median(rounds.map(r => r.genS + r.coldS))}%.6f")),
-      "measure_s" -> Json.raw(f"$measureS%.6f"),
-      "reps" -> Json.raw(rep.toString),
-      "rep_wall_s" -> Json.arr(repWall.map(v => Json.raw(f"$v%.6f"))),
-      "rep_cal_s" -> Json.arr(repCal.toSeq.map(v => Json.raw(f"$v%.6f"))),
-      "tail_pct" -> Json.raw(f"$tailPct%.4f"),
-      "tail_n" -> Json.raw(untraced.size.toString),
-      "attempted" -> Json.raw(attempted.toString),
-      "failed" -> Json.raw(failedTimed.toString),
-      "failures" -> Json.arr(failures.toSeq.map(f => Json.obj(
-        "query" -> Json.str(f.query), "rep" -> Json.raw(f.rep.toString),
-        "phase" -> Json.str(f.phase), "exception" -> Json.str(f.cls),
-        "message" -> Json.str(f.message)))),
-      "queries" -> Json.obj(items.map { q =>
+        "warmup_settled" -> JBool(settled),
+        // set-up time: session start, then the median set-up round (input
+        // generation plus the cold pass that builds the stores)
+        "setup_s" -> JDouble(sessionS + median(rounds.map(_.setupS)))),
+      "measure_s" -> JDouble(measureS),
+      "reps" -> JLong(rep),
+      "rep_wall_s" -> JArray(repWall.map(JDouble(_)).toList),
+      "rep_cal_s" -> JArray(cal.map(JDouble(_)).toList),
+      "tail_pct" -> JDouble(tailPct),
+      "tail_n" -> JLong(untraced.size),
+      "attempted" -> JLong(executed.size),
+      "failed" -> JLong(failures.size),
+      "failures" -> JArray(failures.map(f => obj(
+        "query" -> JString(f.query), "rep" -> JLong(f.rep),
+        "phase" -> JString(f.phase), "exception" -> JString(f.cls),
+        "message" -> JString(f.message))).toList),
+      "queries" -> obj(items.map { q =>
         val ts = timed.filter(_.query == q)
-        q -> Json.obj(
-          "median_s" -> Json.raw(f"${median(ts.map(_.total))}%.6f"),
-          "build_s" -> Json.raw(f"${median(ts.map(_.build))}%.6f"),
-          "plan_s" -> Json.raw(f"${median(ts.map(_.plan))}%.6f"),
-          "exec_s" -> Json.raw(f"${median(ts.map(_.exec))}%.6f"),
-          "rows" -> Json.raw(reference.get(q).map(_.rows.toString).getOrElse("null")))
+        q -> obj(
+          "median_s" -> dbl(median(ts.map(_.total))),
+          "build_s" -> dbl(median(ts.map(_.build))),
+          "plan_s" -> dbl(median(ts.map(_.plan))),
+          "exec_s" -> dbl(median(ts.map(_.exec))),
+          "cold_s" -> JArray(rounds.map(r => dbl(r.cold.getOrElse(q, Double.NaN))).toList),
+          "rows" -> reference.get(q).map(d => JLong(d.rows)).getOrElse(JNull))
       }: _*),
       "end_to_end" -> e2e,
       "per_layer" -> layerJson)
-    Files.writeString(o.record, record.render + "\n")
+    Files.writeString(o.record, compact(render(record)) + "\n")
     System.err.println("[perfbench] record written")
   }
 
@@ -562,7 +597,7 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
 
   private def layerMetrics(rounds: Seq[(Long, Map[String, Double])],
       traced: Seq[Seq[Sample]], untraced: Seq[Seq[Sample]],
-      tables: Map[String, (Long, Long)]): Json.Value = {
+      tables: Map[String, (Long, Long)]): JValue = {
     val tracedReps = traced.map(_.head.rep).toSet
     val jobs = collector.synchronized(collector.jobs.values.toSeq)
     val tasks = collector.synchronized(collector.tasks.toSeq)
@@ -589,8 +624,7 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
       if (tot == 0) 1.0 else st.map { case (t, k) => t * k }.sum / tot
     }
     val engineRows = engineTimes.filter(e => tracedReps(e._1))
-    def num(v: Double, unit: String) = Json.num(v, unit)
-    Json.obj(
+    obj(
       "operators.build_s" -> num(perRep(r => repSamples(r).map(_.build).sum), "s"),
       "operators.build_jobs" -> num(perRep(r => jobsIn(r, "build").size), "count"),
       "plan.s" -> num(perRep(r => repSamples(r).map(_.plan).sum), "s"),
@@ -655,34 +689,34 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
     val spans = trace.all
     val children = spans.groupBy(_.parent)
     val lines = spans.map { s =>
-      Json.obj("id" -> Json.raw(s.id.toString), "parent" -> Json.raw(s.parent.toString),
-        "name" -> Json.str(s.name), "kind" -> Json.str(s.kind),
-        "dur_s" -> Json.raw(f"${secs(s.endNs - s.startNs)}%.6f"),
-        "self_s" -> Json.raw(f"${secs(trace.selfNs(s, children))}%.6f")).render
+      compact(render(obj("id" -> JLong(s.id), "parent" -> JLong(s.parent),
+        "name" -> JString(s.name), "kind" -> JString(s.kind),
+        "dur_s" -> JDouble(secs(s.endNs - s.startNs)),
+        "self_s" -> JDouble(secs(trace.selfNs(s, children))))))
     }
     Files.writeString(path, lines.mkString("", "\n", "\n"))
   }
 
-  private def provenance(tables: Map[String, (Long, Long)]): Json.Value = {
+  private def provenance(tables: Map[String, (Long, Long)]): JValue = {
     val rt = ManagementFactory.getRuntimeMXBean
     val conf = spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.graft.") || k == "spark.sql.codegen.cache.maxEntries" ||
         k == "spark.sql.shuffle.partitions" || k == "spark.master"
     }
-    Json.obj(
-      "nproc" -> Json.raw(cores.toString),
-      "SPARK_GRAFT_CPUS" -> sys.env.get("SPARK_GRAFT_CPUS").map(Json.str).getOrElse(Json.raw("null")),
-      "SPARK_GRAFT_IVF_K_CAP" -> sys.env.get("SPARK_GRAFT_IVF_K_CAP").map(Json.str).getOrElse(Json.raw("null")),
-      "SPARK_GRAFT_CODEGEN_CACHE" -> sys.env.get("SPARK_GRAFT_CODEGEN_CACHE").map(Json.str).getOrElse(Json.raw("null")),
-      "xmx" -> Json.str(rt.getInputArguments.asScala.filter(_.startsWith("-Xmx")).mkString(" ")),
-      "max_heap_mb" -> Json.raw((Runtime.getRuntime.maxMemory / 1048576).toString),
-      "seed" -> Json.raw(o.seed.toString),
-      "copies" -> Json.raw(copies.toString),
-      "spark" -> Json.str(spark.version),
-      "jdk" -> Json.str(System.getProperty("java.version")),
-      "confs" -> Json.obj(conf.toSeq.sorted.map { case (k, v) => k -> Json.str(v) }: _*),
-      "tables" -> Json.obj(tables.toSeq.sorted.map { case (t, (r, b)) =>
-        t -> Json.obj("rows" -> Json.raw(r.toString), "bytes" -> Json.raw(b.toString)) }: _*))
+    obj(
+      "nproc" -> JLong(cores),
+      "SPARK_GRAFT_CPUS" -> str(sys.env.get("SPARK_GRAFT_CPUS")),
+      "SPARK_GRAFT_IVF_K_CAP" -> str(sys.env.get("SPARK_GRAFT_IVF_K_CAP")),
+      "SPARK_GRAFT_CODEGEN_CACHE" -> str(sys.env.get("SPARK_GRAFT_CODEGEN_CACHE")),
+      "xmx" -> JString(rt.getInputArguments.asScala.filter(_.startsWith("-Xmx")).mkString(" ")),
+      "max_heap_mb" -> JLong(Runtime.getRuntime.maxMemory / 1048576),
+      "seed" -> JLong(o.seed),
+      "copies" -> JLong(copies),
+      "spark" -> JString(spark.version),
+      "jdk" -> JString(System.getProperty("java.version")),
+      "confs" -> obj(conf.toSeq.sorted.map { case (k, v) => k -> JString(v) }: _*),
+      "tables" -> obj(tables.toSeq.sorted.map { case (t, (r, b)) =>
+        t -> obj("rows" -> JLong(r), "bytes" -> JLong(b)) }: _*))
   }
 
   private def median(xs: Seq[Double]): Double = quantile(xs.sorted, 0.5)
@@ -696,31 +730,4 @@ final class Run(spark: SparkSession, o: Main.Opts, w: Workload, cores: Int,
       val f = x - i
       if (i + 1 < sorted.size) sorted(i) * (1 - f) + sorted(i + 1) * f else sorted(i)
     }
-}
-
-/** Minimal JSON builder: the record is written without extra libraries. */
-object Json {
-  sealed trait Value { def render: String }
-  final case class Raw(s: String) extends Value { def render: String = s }
-  final case class Obj(kv: Seq[(String, Value)]) extends Value {
-    def render: String = kv.map { case (k, v) => quote(k) + ":" + v.render }.mkString("{", ",", "}")
-  }
-  final case class Arr(vs: Seq[Value]) extends Value {
-    def render: String = vs.map(_.render).mkString("[", ",", "]")
-  }
-  def raw(s: String): Value = Raw(s)
-  def str(s: String): Value = Raw(quote(s))
-  def obj(kv: (String, Value)*): Value = Obj(kv)
-  def arr(vs: Seq[Value]): Value = Arr(vs)
-  def num(v: Double, unit: String): Value =
-    obj("value" -> raw(if (v.isNaN || v.isInfinite) "null" else v.toString), "unit" -> str(unit))
-  def quote(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }
