@@ -35,7 +35,8 @@ import java.nio.file.{Files, Paths}
   * scaling a corpus does not mint new countries.
   *
   * Output: one JSON line (stdout + target/scale_bench.json) with
-  * per-query seconds, output rows, and contract-boolean status.
+  * per-query seconds, output rows, contract-boolean status and, for a
+  * failed query, the `failure` that made its seconds -1.
   * Methodology matches Bench: full warm-up pass, then two timed passes,
   * per-query min, cold cache per timed query.
   */
@@ -83,70 +84,49 @@ object ScaleBench {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       Paths.get("target", s"scale${factor}x").toAbsolutePath.toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fleet-sized codegen class cache — see the note in graft.Bench
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cores)
 
     if (!Files.exists(Paths.get(out, "_SCALE_DONE")))
       build(spark, base, factor, out)
 
-    def once(fn: (SparkSession, String) => DataFrame): (Double, Long, Boolean) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, out)
-        // Timed action = noop write, same as Bench: evaluates every output
-        // column end-to-end (count() would let ColumnPruning strip the
-        // computed columns — it hid k1's per-distinct-user HLL buffers).
-        df.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // Contract booleans + row count checked UNTIMED afterwards.
+    // Progress marker per (phase, query) on stderr — when a scale leg
+    // dies mid-suite (r19: an 80× executor OOM), the last marker names
+    // the culprit; without it the failure is an anonymous stage id.
+    def once(phase: String)(n: String, fn: Harness.Query): (Harness.Run, Long, Boolean) = {
+      System.err.println(s"[scalebench] $phase $n")
+      var rows = -1L
+      var ok = false
+      // Contract booleans + row count checked UNTIMED after the write.
+      val r = Harness.runQuery(spark, out, n, fn, df => {
         val contracts = df.schema.fields
           .filter(f => f.dataType == BooleanType && ContractCols(f.name))
           .map(f => min(col(f.name)).as(f.name)) // min(bool): false iff any false
         val row = df.agg(count(lit(1)).as("n"), contracts.toSeq: _*).head()
-        val ok = (1 until row.length).forall(i => !row.isNullAt(i) && row.getBoolean(i))
-        (sec, row.getLong(0), ok)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          (-1.0, -1L, false)
+        rows = row.getLong(0)
+        ok = (1 until row.length).forall(i => !row.isNullAt(i) && row.getBoolean(i))
+      })
+      r.failure.foreach(f => System.err.println(s"FAILED: ${f.cls}: ${f.message}"))
+      (r, rows, ok)
+    }
+    val qs = Harness.queries
+    qs.foreach { case (n, fn) => once("warmup")(n, fn) } // warm-up
+    val pass1 = qs.map { case (n, fn) => n -> once("pass1")(n, fn) }
+    val pass2 = qs.map { case (n, fn) => n -> once("pass2")(n, fn) }
+    val results = pass1.map { case (n, (r1, rows1, ok1)) =>
+      val (r2, _, ok2) = pass2(n)
+      val t = if (r1.seconds < 0 || r2.seconds < 0) -1.0 else math.min(r1.seconds, r2.seconds)
+      n -> ((t, rows1, ok1 && ok2, r1.failure.map(1 -> _).orElse(r2.failure.map(2 -> _))))
+    }
+
+    val qsJson = results.toSeq.sortBy(_._1).map { case (n, (t, rows, ok, failure)) =>
+      val reason = failure.fold("") { case (pass, f) =>
+        s""","failure":{"pass":$pass,"phase":"${f.phase}","class":${Harness.jsonString(f.cls)},""" +
+          s""""message":${Harness.jsonString(f.message)}}"""
       }
-    }
-
-    // Progress marker per (phase, query) on stderr — when a scale leg
-    // dies mid-suite (r19: an 80× executor OOM), the last marker names
-    // the culprit; without it the failure is an anonymous stage id.
-    def traced(phase: String)(n: String, fn: (SparkSession, String) => DataFrame)
-        : (Double, Long, Boolean) = {
-      System.err.println(s"[scalebench] $phase $n")
-      once(fn)
-    }
-    val qs = SparkEntry.queries
-    qs.foreach { case (n, fn) => traced("warmup")(n, fn) } // warm-up
-    val pass1 = qs.map { case (n, fn) => n -> traced("pass1")(n, fn) }
-    val pass2 = qs.map { case (n, fn) => n -> traced("pass2")(n, fn) }
-    val results = pass1.map { case (n, (t1, rows1, ok1)) =>
-      val (t2, _, ok2) = pass2(n)
-      val t = if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2)
-      n -> ((t, rows1, ok1 && ok2))
-    }
-
-    val qsJson = results.toSeq.sortBy(_._1).map { case (n, (t, rows, ok)) =>
-      s""""$n":{"sec":${f"$t%.3f"},"rows":$rows,"contracts_ok":$ok}"""
+      s""""$n":{"sec":${f"$t%.3f"},"rows":$rows,"contracts_ok":$ok$reason}"""
     }.mkString("{", ",", "}")
-    val total = results.values.collect { case (t, _, _) if t >= 0 => t }.sum
-    val allOk = results.values.forall { case (t, _, ok) => t >= 0 && ok }
+    val total = results.values.collect { case (t, _, _, _) if t >= 0 => t }.sum
+    val allOk = results.values.forall { case (t, _, ok, _) => t >= 0 && ok }
     val json = s"""{"metric":"scale_total","value":${f"$total%.2f"},"unit":"sec",""" +
       s""""factor":$factor,"base":"$base","all_contracts_ok":$allOk,"queries":$qsJson}"""
     Files.createDirectories(Paths.get("target"))
