@@ -68,11 +68,12 @@ object Harness {
   /** Builds `name` on `dir` and writes it to the noop sink, timing from
     * the constructor call to the end of the write. Never throws: a failure
     * is returned in the record. `after` runs on the built DataFrame once
-    * the timed window has closed, before the next query clears the cache.
+    * the timed window has closed, while the query's pins are still live.
     *
-    * The cache is cleared first because CacheManager matches canonicalized
-    * plans: a persist() left over from an earlier pass (or an earlier
-    * query — d6 rebuilds d1/d2's relations) would silently skip the whole
+    * The cache is cleared when the query returns, success or failure, so
+    * its pins end with it; and first, because CacheManager matches
+    * canonicalized plans: a relation cached by an earlier pass (or query
+    * — d6 rebuilds d1/d2's relations) would silently skip the whole
     * candidate-generation stage. The action is a noop write, not count():
     * under count() ColumnPruning strips every output column the action
     * doesn't reference, so narrow-map queries timed as bare scans and k1's
@@ -85,16 +86,18 @@ object Harness {
       Run(name, buildS, runS, Some(Failure(phase, e.getClass.getName, String.valueOf(e.getMessage))))
     def sec(from: Long, to: Long): Double = (to - from) / 1e9
     spark.catalog.clearCache()
-    val t0 = System.nanoTime()
-    val df = try fn(spark, dir)
-      catch { case e: Throwable => return failed("build", sec(t0, System.nanoTime()), 0.0, e) }
-    val t1 = System.nanoTime()
-    try df.write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable => return failed("run", sec(t0, t1), sec(t1, System.nanoTime()), e) }
-    val t2 = System.nanoTime()
-    try after(df)
-    catch { case e: Throwable => return failed("after", sec(t0, t1), sec(t1, t2), e) }
-    Run(name, sec(t0, t1), sec(t1, t2), None)
+    try {
+      val t0 = System.nanoTime()
+      val df = try fn(spark, dir)
+        catch { case e: Throwable => return failed("build", sec(t0, System.nanoTime()), 0.0, e) }
+      val t1 = System.nanoTime()
+      try df.write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => return failed("run", sec(t0, t1), sec(t1, System.nanoTime()), e) }
+      val t2 = System.nanoTime()
+      try after(df)
+      catch { case e: Throwable => return failed("after", sec(t0, t1), sec(t1, t2), e) }
+      Run(name, sec(t0, t1), sec(t1, t2), None)
+    } finally spark.catalog.clearCache()
   }
 
   /** Seconds rounded to milliseconds: full doubles made the bench line ~2×

@@ -15,12 +15,14 @@ object Verify {
     // floor-on == floor-off), and the dump is not timed.
     val spark = Harness.session(Harness.cores, "spark.graft.scan.fillCores.minBytes" -> "1")
     new java.io.File(outDir).mkdirs()
+    // cleared after each dump, as runQuery does: a later query (d6 over
+    // d1/d2's relations) must not be answered from an earlier one's pins
     Harness.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      } finally spark.catalog.clearCache()
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -222,20 +222,19 @@ object DedupOps {
     * Shuffle discipline: shingle payloads are computed only for candidate
     * ids (small by LSH design) and joined back per pair side — at 100 TB
     * this is the difference between shuffling the corpus ~bands times and
-    * shuffling an id list once. The persist + count() is deliberate (the
-    * same eager materialization MLlib's LSH models use): `pairs` is
-    * referenced three times (verify join ×2 + candidate-id derivation)
-    * and lambda exprIds defeat ReuseExchange, so without it the whole
-    * signature pipeline re-executes per reference; the count also gives
-    * the optimizer real statistics, so the candidate-id join broadcasts
-    * when pairs are small and gracefully shuffles when they are not.
-    * Pairs are (long, long) — linear in corpus and orders of magnitude
-    * smaller than it, safe to cache at any scale.
+    * shuffling an id list once. `pairs` is referenced three times
+    * (verify join ×2 + candidate-id derivation), so it is pinned with
+    * [[Materialize.eager]] (the eager materialization MLlib's LSH models
+    * use); the candidate-id join then broadcasts when pairs are small and
+    * shuffles when they are not. Pairs are (long, long) — linear in
+    * corpus and orders of magnitude smaller than it, safe to cache at
+    * any scale.
     *
     * Contract notes: building the DataFrame therefore RUNS the candidate
     * stage eagerly (like fitting an MLlib model), and the cached pair
-    * relation lives until the session ends or `spark.catalog.clearCache()`
-    * — one id-pair relation per operator build, not per query execution. */
+    * relation is released when the query that built it ends
+    * ([[graft.Harness.runQuery]] clears the cache) unless a memo holds
+    * it — one id-pair relation per operator build, not per execution. */
   private def verifyPairs(docs: DataFrame, pairs0: DataFrame,
                           threshold: Double): DataFrame =
     verifiedSetMetrics(docs, pairs0)
@@ -253,17 +252,7 @@ object DedupOps {
     * drop, so the jaccard-only path pays nothing for the containment
     * columns. */
   private def verifiedSetMetrics(docs: DataFrame, pairs0: DataFrame): DataFrame =
-    verifiedSetMetricsOn(docs, eagerPairs(pairs0))
-
-  /** Persist + materialize a candidate-pair relation (the eager half of
-    * [[verifiedSetMetrics]], exposed so the dir-keyed prefix entry
-    * points can memoize THIS relation per corpus fingerprint instead of
-    * pinning a fresh copy per invocation). */
-  private def eagerPairs(pairs0: DataFrame): DataFrame = {
-    val pairs = pairs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    pairs
-  }
+    verifiedSetMetricsOn(docs, Materialize.eager(pairs0))
 
   /** The verify scaffold over an ALREADY-materialized pair relation. */
   private def verifiedSetMetricsOn(docs: DataFrame, pairs: DataFrame): DataFrame = {
@@ -708,7 +697,7 @@ object DedupOps {
       tauTag: String)(pairs0: => DataFrame): DataFrame =
     prefixPairMemo.getOrBuild(s, graft.sources.Layouts.dirTag(dir), family,
       graft.sources.Layouts.tableFingerprint(dir, "documents") + "|" + tauTag)(
-      eagerPairs(pairs0))
+      Materialize.eager(pairs0))
 
   /** [[d4PrefixJaccard]]'s candidate stage, exposed so the skew spec can
     * assert the claim the switch exists for: one stopword-grade trigram
@@ -921,8 +910,9 @@ object DedupOps {
     val emb = Tables.embeddings(s, dir)
     // single-pass bucket candidates (same shuffle discipline as
     // verifyPairs: one codegen'd banding pass, id-only exchange, native
-    // pair-gen)
-    val pairs = emb
+    // pair-gen); pinned because it is read three times (both verify
+    // joins + candidate ids), so the hyperplane pass runs once
+    val pairs = Materialize.eager(emb
       .select($"vec_id", posexplode(graft.functions.signLshBandKeys(
         $"embedding", SignLsh.NumBands, SignLsh.BandBits, SignLsh.Dim, SignLsh.Seed))
         .as(Seq("band", "key")))
@@ -934,11 +924,7 @@ object DedupOps {
           "transform(slice(ids, i + 2, size(ids) - i - 1), " +
           "y -> struct(x AS vec_a, y AS vec_b))))")).as("p"))
       .select($"p.vec_a", $"p.vec_b")
-      .dropDuplicates("vec_a", "vec_b")
-      // see verifiedPairs: multi-referenced tiny relation, eagerly cached
-      // so the hyperplane pass runs once and the optimizer sees real stats
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
+      .dropDuplicates("vec_a", "vec_b"))
     val candIds = pairs.select(explode(array($"vec_a", $"vec_b")).as("vec_id")).distinct()
     val candEmb = emb.join(candIds, Seq("vec_id"))
     pairs
@@ -1066,10 +1052,10 @@ object DedupOps {
     * GraphFrames-free connected components. Returns (node, cluster) for
     * every node that appears in an edge; cluster = the component's min
     * node id. Each iteration is one equi-join + min-aggregate, with the
-    * label relation persisted and the previous one unpersisted so the
-    * lineage cannot snowball; convergence is detected by counting changed
-    * labels (min-labels decrease monotonically, so termination is
-    * guaranteed in ≤ diameter iterations).
+    * label relation checkpointed so the lineage cannot snowball;
+    * convergence is detected by counting changed labels (min-labels
+    * decrease monotonically, so termination is guaranteed in ≤ diameter
+    * iterations).
     *
     * Scale: per-iteration cost is one shuffle of (edge endpoints ×
     * labels) — linear. Iteration COUNT is the graph diameter; near-dup
@@ -1083,11 +1069,6 @@ object DedupOps {
   private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0)
 
   private[graft] def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(lvl)
     // Eager localCheckpoint, NOT persist: each round references the label
     // relation twice (directly + under the neighbor join), so a cached-but-
     // lineage-carrying plan DOUBLES per round — an exponential Catalyst
@@ -1108,28 +1089,31 @@ object DedupOps {
       val out = df.observe(obs, metric.as("m")).localCheckpoint(true)
       (out, obs.get.apply("m").asInstanceOf[Long])
     }
-    var (labels, changed) = observed(
-      sym.groupBy(col("src").as("node")).agg(min(col("dst")).as("nbl"))
-        .select(col("node"), least(col("node"), col("nbl")).as("lbl")),
-      count(lit(1))) // row count: 0 on an empty graph — skip the loop
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val nbr = sym.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy(col("src").as("node")).agg(min(col("lbl")).as("nbl"))
-      val (next, c) = observed(
-        labels.withColumnRenamed("lbl", "old")
-          .join(nbr, Seq("node"), "left")
-          .select(col("node"), col("old"),
-            least(col("old"), coalesce(col("nbl"), col("old"))).as("lbl")),
-        count(when(col("lbl") =!= col("old"), lit(1))))
-      changed = c
-      labels = next.select(col("node"), col("lbl"))
-      iter += 1
+    // every round reads the 2×edges relation; it is released before the
+    // convergence check, so a require-throw leaves nothing pinned
+    val (labels, changed) = Materialize.during(edges
+        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))) { sym =>
+      var (labels, changed) = observed(
+        sym.groupBy(col("src").as("node")).agg(min(col("dst")).as("nbl"))
+          .select(col("node"), least(col("node"), col("nbl")).as("lbl")),
+        count(lit(1))) // row count: 0 on an empty graph — skip the loop
+      var iter = 0
+      while (changed > 0 && iter < maxIter) {
+        val nbr = sym.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
+          .groupBy(col("src").as("node")).agg(min(col("lbl")).as("nbl"))
+        val (next, c) = observed(
+          labels.withColumnRenamed("lbl", "old")
+            .join(nbr, Seq("node"), "left")
+            .select(col("node"), col("old"),
+              least(col("old"), coalesce(col("nbl"), col("old"))).as("lbl")),
+          count(when(col("lbl") =!= col("old"), lit(1))))
+        changed = c
+        labels = next.select(col("node"), col("lbl"))
+        iter += 1
+      }
+      (labels, changed)
     }
-    // unpersist BEFORE the convergence check: a require-throw must not
-    // leave the 2×edges relation pinned in the executor store (callers
-    // like Bench catch and retry — each leaked copy would accumulate)
-    sym.unpersist()
     require(changed == 0,
       s"connectedComponents: not converged after $maxIter iterations " +
         "(graph deeper than expected — switch to large-star/small-star)")

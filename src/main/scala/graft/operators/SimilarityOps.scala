@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1682,8 +1682,8 @@ object SimilarityOps {
     val isEval = $"vec_id" % graft.operators.TextOps.DecontMod === 0
     val ev = emb.where(isEval)
       .select($"vec_id".as("ev_id"), $"embedding".as("ev_emb"))
-    val evCells = assignCells(ev, "ev_id", "ev_emb", centroids)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read by the radii collect and by the probe join
+    val evCells = Materialize.eager(assignCells(ev, "ev_id", "ev_emb", centroids))
     val clamp = (c: Column) => greatest(lit(-1.0), least(lit(1.0), c))
     // the centroid is an arbitrary reference point — float-rounding it
     // is sound because the radius AND the query bounds both use the

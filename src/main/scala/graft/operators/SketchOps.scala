@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -165,13 +165,12 @@ object SketchOps {
     val cms = ev.stat.countMinSketch($"user_id", eps, 0.99, 7077)
     // one aggregate pass serves both the top-5 and the total (for the
     // error bound) — no separate full-corpus count()
-    val grouped = ev.groupBy($"user_id").agg(count(lit(1)).as("exact_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val top = grouped
-      .orderBy($"exact_cnt".desc, $"user_id".asc).limit(5)
-      .as[(Long, Long)].collect() // bounded: exactly 5 rows
-    val total = grouped.agg(sum($"exact_cnt")).as[Long].collect()(0)
-    grouped.unpersist()
+    val (top, total) = Materialize.during(
+        ev.groupBy($"user_id").agg(count(lit(1)).as("exact_cnt"))) { grouped =>
+      (grouped.orderBy($"exact_cnt".desc, $"user_id".asc).limit(5)
+        .as[(Long, Long)].collect(), // bounded: exactly 5 rows
+       grouped.agg(sum($"exact_cnt")).as[Long].collect()(0))
+    }
     top.toSeq.map { case (uid, exact) =>
       val est = cms.estimateCount(uid)
       (uid, exact,
@@ -321,9 +320,7 @@ object SketchOps {
     * SketchOpsSpec drives planted synthetic corpora through it. */
   private[graft] def sourceOverlap(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    val sets = gramSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.during(gramSets(docs)) { sets =>
       val perSrc = perSourceSig(sets)
       val a = perSrc.select($"source".as("source_a"), $"n".as("n_a"), $"sig".as("sig_a"))
       val b = perSrc.select($"source".as("source_b"), $"n".as("n_b"), $"sig".as("sig_b"))
@@ -345,7 +342,7 @@ object SketchOps {
       // S(S-1)/2 rows — bounded by source cardinality, never by data volume
       val rows = out.collect().toIndexedSeq
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
-    } finally sets.unpersist()
+    }
   }
 
   private val k5Sql = {
@@ -424,12 +421,9 @@ object SketchOps {
     * `matches` against [[sourceOverlap]]'s. */
   private[graft] def signatureOverlap(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    // both pair-join sides read the signature relation: persist the
-    // S-row (source, n, 128 longs) result eagerly (the d5/m6 discipline)
-    // so the corpus-touching gram pass runs ONCE, not once per side
-    val perSrc = perSourceSig(gramSets(docs))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perSrc.count()
+    // both pair-join sides read the S-row (source, n, 128 longs)
+    // signature relation: the corpus-touching gram pass runs ONCE
+    val perSrc = Materialize.eager(perSourceSig(gramSets(docs)))
     val a = perSrc.select($"source".as("source_a"), $"n".as("n_a"), $"sig".as("sig_a"))
     val b = perSrc.select($"source".as("source_b"), $"n".as("n_b"), $"sig".as("sig_b"))
     a.join(broadcast(b), $"source_a" < $"source_b")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -788,17 +788,15 @@ object TextOps {
         import s.implicits._
         val path = t4cVocabPath(dir)
         if (!graft.sources.Layouts.completedTable(path)) {
-          val wc = Tables.documents(s, dir)
-            .select(explode(regexp_extract_all(
-              lower($"text"), lit(BpeTokenRe), lit(0))).as("w"))
-            .where($"w".rlike("^[a-z]"))
-            .groupBy($"w").agg(count(lit(1)).as("c"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val pieces = try {
+          val pieces = Materialize.during(Tables.documents(s, dir)
+              .select(explode(regexp_extract_all(
+                lower($"text"), lit(BpeTokenRe), lit(0))).as("w"))
+              .where($"w".rlike("^[a-z]"))
+              .groupBy($"w").agg(count(lit(1)).as("c"))) { wc =>
             if (wc.count() <= DriverBpeTypeCap)
               bpeTrainMerges(wc.as[(String, Long)].collect().toSeq, BpeMerges)
             else bpeTrainMergesDistributed(wc, BpeMerges)
-          } finally wc.unpersist()
+          }
           graft.sources.Layouts.publishAtomically(
             pieces.zipWithIndex.map { case (p, i) => (i, p) }
               .toDF("rank", "piece"), path, files = 1)
@@ -2318,18 +2316,11 @@ object TextOps {
   private[graft] def pplBucketize(s: SparkSession, scoredIn: DataFrame): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    // `scored` is referenced twice — the histogram below and the final
-    // bucket assignment — and without materialization Catalyst plans the
-    // WHOLE scoring subtree (bigram explode + model join + per-doc
-    // aggregate) once per reference: r19's plan audit found the duplicate
-    // pair of scoring exchanges in every e5-sheet consumer (e5–e7,
-    // e9–e11, p8). Persisting the narrow (doc_id, lang, score_micro)
-    // relation computes the scoring once per query. Eager count, k5b
-    // discipline; the decompressed-stats broadcast-flip lesson
-    // (Tables.fillCores) does not apply — three thin columns, and the
-    // only join consuming this relation is an explicit broadcast(cuts).
-    val scored = scoredIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count()
+    // read twice (histogram + bucket assignment): unpinned, the whole
+    // scoring subtree ran twice in every e5-sheet consumer (r19 plan
+    // audit). The broadcast-flip lesson (Tables.fillCores) does not apply
+    // — three thin columns, consumed only by an explicit broadcast(cuts).
+    val scored = Materialize.eager(scoredIn)
     val hist = scored.groupBy($"lang", $"score_micro")
       .agg(count(lit(1)).as("c"))
     val classes = hist
@@ -2682,18 +2673,13 @@ object TextOps {
     val profile = langProfileRows(s, dir)
     val best = bestLangStruct(profileLangs(profile))
     val docs = Tables.documents(s, dir)
-    docs.select($"doc_id", $"text")
+    withGateTail(docs.select($"doc_id", $"text")
       .join(profileScores(docs, $"text", Seq($"doc_id"), profile,
           withNTri = true),
         Seq("doc_id"), "left")
       .select($"doc_id", best.getField("c").as("pred_lang"),
-        best.getField("s").as("sc"), $"n_tri", $"text")
-      .select($"doc_id", $"pred_lang",
-        expr("sc div greatest(n_tri, 1)").as("conf_micro"),
-        stopHitsExpr($"pred_lang", $"text").as("stop_hits"),
-        blockHitsExpr($"pred_lang", $"text").as("block_hits"))
-      .withColumn("stop_keep", $"stop_hits" >= LangStopsMinHits)
-      .withColumn("block_keep", $"block_hits" === 0)
+        best.getField("s").as("sc"), $"n_tri", $"text"),
+      expr("sc div greatest(n_tri, 1)").as("conf_micro"))
   }
 
   /** The gate-only relation behind t24, t26 and the e5 sheet — the
@@ -2709,16 +2695,21 @@ object TextOps {
     val profile = langProfileRows(s, dir)
     val best = bestLangStruct(profileLangs(profile))
     val docs = Tables.documents(s, dir)
-    docs.select($"doc_id", $"text")
+    withGateTail(docs.select($"doc_id", $"text")
       .join(profileScores(docs, $"text", Seq($"doc_id"), profile),
         Seq("doc_id"), "left")
-      .select($"doc_id", best.getField("c").as("pred_lang"), $"text")
-      .select($"doc_id", $"pred_lang",
-        stopHitsExpr($"pred_lang", $"text").as("stop_hits"),
-        blockHitsExpr($"pred_lang", $"text").as("block_hits"))
-      .withColumn("stop_keep", $"stop_hits" >= LangStopsMinHits)
-      .withColumn("block_keep", $"block_hits" === 0)
+      .select($"doc_id", best.getField("c").as("pred_lang"), $"text"))
   }
+
+  /** The gate tail [[langSignals]] and [[langGates]] share, so a gate
+    * edit lands in both: (doc_id, pred_lang, text, …) → (doc_id,
+    * pred_lang, `carry`…, stop_hits, block_hits, stop_keep, block_keep). */
+  private def withGateTail(scored: DataFrame, carry: Column*): DataFrame =
+    scored.select(Seq(col("doc_id"), col("pred_lang")) ++ carry ++ Seq(
+        stopHitsExpr(col("pred_lang"), col("text")).as("stop_hits"),
+        blockHitsExpr(col("pred_lang"), col("text")).as("block_hits")): _*)
+      .withColumn("stop_keep", col("stop_hits") >= LangStopsMinHits)
+      .withColumn("block_keep", col("block_hits") === 0)
 
   /** The oracle's stop-hits CASE over (pred_lang, text) — generated
     * from the SAME [[LangStops]] Seq (list_filter/list_contains

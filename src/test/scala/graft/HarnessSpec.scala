@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Materialize
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,16 +28,32 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("runQuery clears a relation persisted by the previous query before timing") {
-    val kept = spark.range(1000).toDF("id")
-    Harness.runQuery(spark, sf, "persists", (_, _) => { kept.persist(); kept.count(); kept })
-    assert(kept.storageLevel !== StorageLevel.NONE)
+    def cacheEmpty = spark.sharedState.cacheManager.isEmpty
+    val stale = spark.range(1000).toDF("id")
+    stale.persist(); stale.count()
     var seen: StorageLevel = null
     val next = Harness.runQuery(spark, sf, "next", (s, _) => {
-      seen = kept.storageLevel
+      seen = stale.storageLevel
       s.range(1).toDF("id")
     })
     assert(next.failure.isEmpty)
     assert(seen === StorageLevel.NONE)
+
+    // and a query's own pins end with it, whether it succeeded or failed
+    val kept = spark.range(1000).toDF("id")
+    val ok = Harness.runQuery(spark, sf, "pins", (_, _) => Materialize.eager(kept))
+    assert(ok.failure.isEmpty)
+    assert(kept.storageLevel === StorageLevel.NONE)
+    assert(cacheEmpty)
+    def pinned = Materialize.eager(spark.range(50).toDF("id"))
+    val failures = Seq(
+      Harness.runQuery(spark, sf, "pin_build", (_, _) => { pinned; throw new IllegalStateException("b") }),
+      Harness.runQuery(spark, sf, "pin_run",
+        (_, _) => pinned.select(raise_error(lit("r")).as("x"))),
+      Harness.runQuery(spark, sf, "pin_after", (_, _) => pinned,
+        _ => throw new IllegalStateException("a")))
+    assert(failures.map(_.failure.map(_.phase)) === Seq(Some("build"), Some("run"), Some("after")))
+    assert(cacheEmpty)
   }
 
   test("Bench reports -1 for a query that failed in any timed pass") {
